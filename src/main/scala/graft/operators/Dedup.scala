@@ -155,6 +155,14 @@ object Dedup {
       .select(col("doc"), col("sig"), col("s.band"), col("s.band_key"))
   }
 
+  /** `est_jaccard` of an `x`/`y` band-join pair: the fraction of equal
+    * positions of the two rided-along signatures. */
+  private def sigAgreement(numHashes: Int): Column =
+    round(expr(
+      s"""aggregate(zip_with(x.sig, y.sig, (a, b) -> IF(a = b, 1.0D, 0.0D)),
+         |          0.0D, (acc, v) -> acc + v) / $numHashes""".stripMargin), 4)
+      .as("est_jaccard")
+
   /** Near-duplicate pairs by MinHash LSH: candidates = docs sharing any
     * band key; estimate = fraction of matching signature positions via a
     * single `zip_with` over the two rided-along signature arrays (no
@@ -178,10 +186,7 @@ object Dedup {
         col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
           col("x.doc") < col("y.doc"))
       .select(col("x.doc").as("doc_a"), col("y.doc").as("doc_b"),
-        round(expr(
-          s"""aggregate(zip_with(x.sig, y.sig, (a, b) -> IF(a = b, 1.0D, 0.0D)),
-             |          0.0D, (acc, v) -> acc + v) / $numHashes""".stripMargin), 4)
-          .as("est_jaccard"))
+        sigAgreement(numHashes))
       .filter(col("est_jaccard") >= minEstimate)
       .distinct()
   }
@@ -210,10 +215,7 @@ object Dedup {
     bandsNew.alias("x").join(bandsCorpus.alias("y"),
         col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key"))
       .select(col("x.doc").as("new_doc"), col("y.doc").as("corpus_doc"),
-        round(expr(
-          s"""aggregate(zip_with(x.sig, y.sig, (a, b) -> IF(a = b, 1.0D, 0.0D)),
-             |          0.0D, (acc, v) -> acc + v) / $numHashes""".stripMargin), 4)
-          .as("est_jaccard"))
+        sigAgreement(numHashes))
       .filter(col("est_jaccard") >= minEstimate)
       .distinct()
   }
@@ -379,35 +381,23 @@ object Dedup {
     * the per-round convergence count. The edge list and each round's
     * labels are MATERIALIZED — an iterative dataflow must cut lineage
     * or round N replays rounds 1..N-1 (and the upstream LSH join) N
-    * times. The cut is pluggable: by default `localCheckpoint`
-    * (executor-resident — fine single-node and fastest); pass a
-    * `checkpointDir` ON A CLUSTER to round-trip each cut through
-    * parquet in reliable storage instead, so a lost executor replays
-    * from the store rather than recomputing the whole iteration (the
-    * plan is otherwise identical — DedupSpec asserts both paths yield
-    * the same components in the same round count). The caller owns the
-    * directory's lifecycle (one subdir per cut is written inside it).
+    * times. The cut is [[LineageCut]]: `localCheckpoint` by default;
+    * pass a `checkpointDir` ON A CLUSTER to round-trip each cut through
+    * parquet in reliable storage instead (the plan is otherwise
+    * identical — DedupSpec asserts both paths yield the same components
+    * in the same round count).
     *
     * Input pairs should be distinct (all the pair operators here emit
     * distinct pairs); duplicate edges cost extra join work but do not
     * affect the result. Returns ((node, component), rounds); `rounds` is
     * the convergence count — DedupSpec's 64-node chain test asserts the
-    * O(log n) bound, and tools.ScaleProbe reports it at 1×/4×/16×
-    * corpus scale. */
+    * O(log n) bound, and perfbench's corpus_dedup workload reports it
+    * as `operators.dedup.cc_rounds`. */
   def connectedComponentsWithRounds(pairs: DataFrame,
       aCol: String = "doc_a", bCol: String = "doc_b",
       maxIterations: Int = 30,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    var cutSeq = 0
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) => df => {
-        val path = s"$dir/cc_cut_$cutSeq"
-        cutSeq += 1
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
-      }
-      case None => _.localCheckpoint()
-    }
+    val cut = LineageCut(checkpointDir, "cc")
     // Checkpoint the symmetrized edge list FIRST: `nodes` and `edges`
     // both consume it, and without this cut each of their checkpoints
     // would re-evaluate the upstream pair operator (the LSH join — the

@@ -353,16 +353,7 @@ object Graph {
                   checkpointDir: Option[String] = None): DataFrame = {
     require(rounds >= 0 && rounds <= 64, s"rounds must be in [0, 64], got $rounds")
     require(cutEvery >= 1, s"cutEvery must be >= 1, got $cutEvery")
-    var cutSeq = 0
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) => df => {
-        val path = s"$dir/bfs_cut_$cutSeq"
-        cutSeq += 1
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
-      }
-      case None => _.localCheckpoint()
-    }
+    val cut = LineageCut(checkpointDir, "bfs")
     // The edge set is loop-invariant: materialize it once through the
     // same cut channel the state uses (reliable checkpoint when a dir
     // is given, localCheckpoint otherwise) instead of re-deriving it

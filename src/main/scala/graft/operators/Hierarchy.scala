@@ -37,10 +37,9 @@ object Hierarchy {
     * round twice (the self-join), so an uncut walk is O(2^rounds) plan
     * nodes: beyond ~12 rounds Catalyst analysis dominates wall time and
     * the driver eventually OOMs just RENDERING the tree (observed at 15
-    * rounds in ScaleProbe). `cutEvery` therefore cuts lineage every few
-    * rounds — `localCheckpoint` by default, a parquet round-trip under
-    * `checkpointDir` for cluster-grade fault tolerance, exactly the
-    * [[Dedup.connectedComponentsWithRounds]] policy. Results are
+    * rounds). `cutEvery` therefore cuts lineage every few rounds with
+    * [[LineageCut]] — `localCheckpoint` by default, a parquet round-trip
+    * under `checkpointDir` for cluster-grade fault tolerance. Results are
     * unaffected (the cut is a materialization barrier, not a semantic
     * change). */
   def rootAndDepth(nodes: DataFrame, idCol: String, parentCol: String,
@@ -49,16 +48,7 @@ object Hierarchy {
     require(rounds >= 0 && rounds <= 40,
       s"rounds must be in [0, 40] (depth <= 2^rounds), got $rounds")
     require(cutEvery >= 1, s"cutEvery must be >= 1, got $cutEvery")
-    var cutSeq = 0
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) => df => {
-        val path = s"$dir/hier_cut_$cutSeq"
-        cutSeq += 1
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
-      }
-      case None => _.localCheckpoint()
-    }
+    val cut = LineageCut(checkpointDir, "hier")
     var state = nodes.select(
       col(idCol).as("id"),
       when(col(parentCol).isNull, col(idCol)).otherwise(col(parentCol))

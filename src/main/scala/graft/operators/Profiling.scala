@@ -61,11 +61,11 @@ object Profiling {
     // Expand rewrite. That rewrite groups the |cols|+1-fold expansion
     // on a key that mixes every profiled column, and the min/max(string)
     // buffers riding the same aggregate demote it to SortAggregate —
-    // measured as THREE full sorts of the expansion (r13 plan audit,
-    // plans/r13/q_profile_before.txt). Per-column hash distincts keep
-    // every stage a true HashAggregate at any scale; the global
-    // stats pass below is keyless, so its string min/max buffers fold
-    // streaming-wise without any sort.
+    // measured as THREE full sorts of the expansion in its physical
+    // plan. Per-column hash distincts keep every stage a true
+    // HashAggregate at any scale; the global stats pass below is
+    // keyless, so its string min/max buffers fold streaming-wise
+    // without any sort.
     val one =
       if (!exact) {
         val aggs = cols.flatMap { c =>

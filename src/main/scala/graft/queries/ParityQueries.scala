@@ -67,7 +67,7 @@ object ParityQueries {
   /** Per-JVM cache of staged stream-INPUT directories, keyed by a
     * content descriptor (fixture dir + slice recipe). Staged files are
     * immutable once written, so every later graded query — and every
-    * Bench warmup/repeat pass — reuses the first staging instead of
+    * warmup/repeat pass — reuses the first staging instead of
     * re-writing 3–6 parquet slices per run (pure temp-I/O overhead,
     * ~3–5 s per suite pass). Checkpoints, query names, and memory
     * sinks stay per-run and unique; only input data is shared.
@@ -1231,7 +1231,7 @@ object ParityQueries {
     // (commit-then-retry), lost state (reload miss), or dropped rows
     // all flip the hash. Needs a retry budget: local masters run with
     // maxFailures=1 unless `local[N,F]` — every session in this repo
-    // (Verify/Bench/specs/PlanDump) grants F=2, and the require makes a
+    // (Verify and the specs) grants F=2, and the require makes a
     // budget-less session fail loudly instead of silently skipping the
     // injection.
     "stream_task_retry" -> ((s, dir) => taskRetryQuery(s, dir)),

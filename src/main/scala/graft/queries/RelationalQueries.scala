@@ -805,8 +805,8 @@ object RelationalQueries {
     // the standard SQL recursion surface; for DEEP chains (depth ~ N)
     // the pointer-doubling operator behind q_recursive_hierarchy stays
     // the declared 100 TB path (O(log depth) rounds vs linear). Scale
-    // guardrail (hit empirically in ScaleProbe): the engine caps total
-    // recursion output at spark.sql.cteRecursionRowLimit = 1e6 rows
+    // guardrail (hit empirically at 16× fixture scale): the engine caps
+    // total recursion output at spark.sql.cteRecursionRowLimit = 1e6 rows
     // with a loud RECURSION_ROW_LIMIT_EXCEEDED — a production run past
     // ~1 M ancestor rows must raise the knob deliberately (the right
     // default for an operator whose failure mode is divergence).

@@ -3319,10 +3319,11 @@ object TrainingDataQueries {
     // of documents by source (the layout every 100 TB corpus uses for
     // its coarse access dimension), then an aggregate whose source
     // predicate is answered by DIRECTORY pruning — the scan lists only
-    // the matching partition (PLANS.md shows it as PartitionFilters
-    // with the data filter gone). The filter value is the min source,
-    // inlined as a literal so pruning happens at plan time; the oracle
-    // applies the same predicate to the unpartitioned parquet.
+    // the matching partition (the physical plan shows it as
+    // PartitionFilters with the data filter gone). The filter value is
+    // the min source, inlined as a literal so pruning happens at plan
+    // time; the oracle applies the same predicate to the unpartitioned
+    // parquet.
     "q_partition_prune" -> ((s, dir) => {
       // Same single-writer computeIfAbsent staging as the stream
       // tertiles: one exclusive partitioned rewrite per JVM, no

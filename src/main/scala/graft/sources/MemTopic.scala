@@ -59,17 +59,20 @@ object MemTopic {
 
   def drop(topic: String): Unit = topics.remove(topic)
 
-  private def part(topic: String, p: Int): ArrayBuffer[String] = {
+  private def partitions(topic: String): Array[ArrayBuffer[String]] = {
     val t = topics.get(topic)
     require(t != null, s"unknown topic '$topic' — MemTopic.create it first")
+    t
+  }
+
+  private def part(topic: String, p: Int): ArrayBuffer[String] = {
+    val t = partitions(topic)
+    require(p >= 0 && p < t.length,
+      s"topic '$topic' has ${t.length} partitions, no partition $p")
     t(p)
   }
 
-  def numPartitions(topic: String): Int = {
-    val t = topics.get(topic)
-    require(t != null, s"unknown topic '$topic' — MemTopic.create it first")
-    t.length
-  }
+  def numPartitions(topic: String): Int = partitions(topic).length
 
   def append(topic: String, p: Int, values: Iterable[String]): Unit = {
     val buf = part(topic, p)
@@ -81,10 +84,20 @@ object MemTopic {
     buf.synchronized { buf.length.toLong }
   }
 
-  /** Records in [start, end) of one partition (bounds from plan time). */
+  /** Records in [start, end) of one partition (bounds from plan time).
+    * Offsets outside the partition fail loudly, like Kafka's default
+    * `failOnDataLoss=true`: a stream resumed from a checkpoint past the
+    * topic's end (the topic was re-created) must not read nothing and
+    * report success. */
   def slice(topic: String, p: Int, start: Long, end: Long): Array[String] = {
     val buf = part(topic, p)
-    buf.synchronized { buf.slice(start.toInt, end.toInt).toArray }
+    buf.synchronized {
+      if (start < 0 || start > end || end > buf.length)
+        throw new IllegalStateException(s"topic '$topic' partition $p: " +
+          s"offsets [$start, $end) are outside [0, ${buf.length}) — " +
+          "records were lost or the topic was re-created")
+      buf.slice(start.toInt, end.toInt).toArray
+    }
   }
 }
 
@@ -192,9 +205,14 @@ private[sources] class MemTopicMicroBatchStream(topic: String)
   override def latestOffset(): Offset =
     MemTopicOffset((0 until nParts).map(p => MemTopic.endOffset(topic, p)))
 
-  override def deserializeOffset(json: String): Offset =
-    MemTopicOffset(json.stripPrefix("[").stripSuffix("]").split(",")
-      .filter(_.nonEmpty).map(_.trim.toLong).toSeq)
+  override def deserializeOffset(json: String): Offset = {
+    val ends = json.stripPrefix("[").stripSuffix("]").split(",")
+      .filter(_.nonEmpty).map(_.trim.toLong).toSeq
+    if (ends.length != nParts)
+      throw new IllegalStateException(s"topic '$topic' has $nParts " +
+        s"partitions but the checkpointed offsets $json have ${ends.length}")
+    MemTopicOffset(ends)
+  }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[MemTopicOffset].ends

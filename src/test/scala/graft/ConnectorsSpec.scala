@@ -148,6 +148,77 @@ class ConnectorsSpec extends SparkSpec {
     } finally MemTopic.drop("mbs")
   }
 
+  /** Runs one AvailableNow pass of `topic` into a parquet sink on the
+    * given checkpoint; the error of a failed pass, with its causes. */
+  private def memTopicRun(topic: String, ckpt: String, out: String): Option[String] = {
+    import org.apache.spark.sql.streaming.Trigger
+    val q = graft.sources.MemTopicStreamSource(topic).loadStream(spark)
+      .writeStream.trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt)
+      .format("parquet").option("path", out).start()
+    try { q.awaitTermination(); None }
+    catch { case e: Exception =>
+      Some(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | "))
+    }
+  }
+
+  test("MemTopic: offsets past a partition's end fail loudly, also on stream resume") {
+    import graft.sources.MemTopic
+    MemTopic.create("mt_lost", numPartitions = 2)
+    try {
+      MemTopic.append("mt_lost", 0, Seq("a", "b"))
+      MemTopic.append("mt_lost", 1, Seq("c"))
+      val bad = intercept[IllegalStateException](MemTopic.slice("mt_lost", 1, 0, 5))
+      assert(bad.getMessage.contains("topic 'mt_lost' partition 1: offsets [0, 5)"))
+      intercept[IllegalStateException](MemTopic.slice("mt_lost", 0, 2, 1))
+      assert(MemTopic.slice("mt_lost", 0, 1, 2).toSeq === Seq("b"))
+      val ckpt = Files.createTempDirectory("graft-mt-lost-ckpt").toString
+      val out = Files.createTempDirectory("graft-mt-lost-out").toString
+      assert(memTopicRun("mt_lost", ckpt, out).isEmpty)
+      // re-created with fewer records: the checkpoint (2, 1) is past the
+      // new ends (1, 0), so the resumed stream must fail, not read nothing
+      MemTopic.create("mt_lost", numPartitions = 2)
+      MemTopic.append("mt_lost", 0, Seq("x"))
+      val err = memTopicRun("mt_lost", ckpt, out)
+      assert(err.exists(e => e.contains("topic 'mt_lost' partition") &&
+          e.contains("records were lost")),
+        s"resume past the topic's end must fail loudly, got $err")
+    } finally MemTopic.drop("mt_lost")
+  }
+
+  test("MemTopic: a checkpointed offset vector of the wrong length fails loudly") {
+    import graft.sources.MemTopic
+    MemTopic.create("mt_parts", numPartitions = 2)
+    try {
+      MemTopic.append("mt_parts", 0, Seq("a"))
+      val ckpt = Files.createTempDirectory("graft-mt-parts-ckpt").toString
+      val out = Files.createTempDirectory("graft-mt-parts-out").toString
+      assert(memTopicRun("mt_parts", ckpt, out).isEmpty)
+      MemTopic.create("mt_parts", numPartitions = 3)
+      MemTopic.append("mt_parts", 2, Seq("b"))
+      val err = memTopicRun("mt_parts", ckpt, out)
+      assert(err.exists(_.contains(
+        "topic 'mt_parts' has 3 partitions but the checkpointed offsets [1,0] have 2")),
+        s"a partition-count change must fail loudly, got $err")
+    } finally MemTopic.drop("mt_parts")
+  }
+
+  test("MemTopic: unknown topics and partitions are rejected with their names") {
+    import graft.sources.MemTopic
+    Seq[() => Any](() => MemTopic.numPartitions("mt_none"),
+        () => MemTopic.endOffset("mt_none", 0),
+        () => MemTopic.append("mt_none", 0, Seq("a"))).foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("unknown topic 'mt_none'"))
+    }
+    MemTopic.create("mt_one", numPartitions = 1)
+    try {
+      val e = intercept[IllegalArgumentException](MemTopic.endOffset("mt_one", 1))
+      assert(e.getMessage.contains("topic 'mt_one' has 1 partitions, no partition 1"))
+    } finally MemTopic.drop("mt_one")
+  }
+
   test("Kafka connector availability is reported, not assumed") {
     // this offline build has no spark-sql-kafka jar; the source must
     // detect that rather than fail at plan time

@@ -124,6 +124,22 @@ class GraphSpec extends SparkSpec {
     assert(cut === got)
   }
 
+  test("bfsDistance: dir-backed lineage cuts equal the default result") {
+    // 12 rounds over a 12-edge chain with cutEvery = 3: the edge cut plus
+    // three state cuts each land in their own subdir
+    val edges = (1L to 12L).map(i => (i, i + 1)).toDF("src", "dst")
+    val sources = Seq(1L).toDF("id")
+    val default = Graph.bfsDistance(edges, sources, rounds = 12)
+      .as[(Long, Long)].collect().toMap
+    val dir = java.nio.file.Files.createTempDirectory("graft-bfs-ckpt").toString
+    val reliable = Graph.bfsDistance(edges, sources, rounds = 12, cutEvery = 3,
+      checkpointDir = Some(dir)).as[(Long, Long)].collect().toMap
+    assert(default === (1L to 13L).map(i => i -> (i - 1)).toMap)
+    assert(reliable === default)
+    assert(new java.io.File(dir).list().sorted.toSeq ===
+      (0 to 3).map(n => s"bfs_cut_$n"))
+  }
+
   test("kCore: peel cascade, induced degrees, undirected view, empty core") {
     // 4-clique {1,2,3,4} + tail 4-5-6: the 3-core is the clique alone,
     // and the peel must CASCADE (removing 6 drops 5's degree to 1,

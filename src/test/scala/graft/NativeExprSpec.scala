@@ -252,4 +252,29 @@ class NativeExprSpec extends SparkSpec {
       .as[(Int, Long)].collect().toSet
     assert(genNull.size === 2 && genNull === arrNull)
   }
+
+  test("GraftExtensions: every function in the table resolves through spark.sql") {
+    graft.plans.GraftExtensions.register(spark)
+    // one call per table entry with its expected first column; a new
+    // entry without a case here fails the key check below
+    val calls: Map[String, (String, Any)] = Map(
+      "graft_dot" -> (
+        "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))", 11.0),
+      "graft_minhash" -> (
+        "SELECT size(graft_minhash(split('a b c d', ' '), 4))", 4),
+      "graft_top_count" -> (
+        "SELECT graft_top_count(array('a', 'b', 'a'))", 2L),
+      "graft_char_stats" -> (
+        "SELECT graft_char_stats('abca').uniq_chars", 3),
+      "graft_jaro_winkler" -> (
+        "SELECT graft_jaro_winkler('graft', 'graft')", 1.0),
+      "graft_pos_ngrams" -> (
+        """SELECT count(*) FROM (SELECT split('a b c d e', ' ') AS w)
+          |LATERAL VIEW graft_pos_ngrams(w, 3) t AS pos, gram_hash""".stripMargin,
+        3L))
+    assert(graft.plans.GraftExtensions.functions.map(_._1).toSet === calls.keySet)
+    calls.foreach { case (name, (sql, want)) =>
+      assert(spark.sql(sql).head().get(0) === want, name)
+    }
+  }
 }
