@@ -122,11 +122,7 @@ object Dedup {
     * of forcing the signature to be computed twice.) */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 16): DataFrame =
-    // Spread the pruned (id, text) rows before the tokenize+hash kernel:
-    // a single-row-group corpus scan would run every signature on one
-    // task (guide §2.5; batch frames only — a no-op at real scan widths).
-    Spread.forCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("doc"), TextFunctions.words(col(textCol)).as("w"))
+    df.select(col(idCol).as("doc"), TextFunctions.words(col(textCol)).as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc"), minhashSigCol(col("w"), numHashes).as("sig"))
 
@@ -243,9 +239,7 @@ object Dedup {
                               evalSplit: String = "test",
                               sampleMod: Int = 1): DataFrame = {
     require(sampleMod >= 1, s"bad sampleMod=$sampleMod")
-    val keyed = Spread.forCompute(
-        df.select(col(idCol), col(splitCol), col(textCol)))
-      .select(col(idCol).as("doc"), col(splitCol).as("split"),
+    val keyed = df.select(col(idCol).as("doc"), col(splitCol).as("split"),
         TextFunctions.words(col(textCol)).as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc"), col("split"),
@@ -318,10 +312,7 @@ object Dedup {
     * NULL array). */
   private def hashKeyed(df: DataFrame, idCol: String, textCol: String,
                         hashArray: Column => Column): DataFrame =
-    // Spread before the tokenize + shingle-hash explode (guide §2.5) —
-    // the per-doc gram kernels otherwise run on the one scan task.
-    Spread.forCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("doc"), TextFunctions.words(col(textCol)).as("w"))
+    df.select(col(idCol).as("doc"), TextFunctions.words(col(textCol)).as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc"), explode(hashArray(col("w"))).as("key"))
 
@@ -500,8 +491,7 @@ object Dedup {
     * codegen'd PROJECTION ([[graft.plans.SimHash32]]) — no token
     * explode, no 32-column aggregation, no shuffle at all. */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    Spread.forCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("doc"),
+    df.select(col(idCol).as("doc"),
         graft.plans.SimHash32(TextFunctions.words(col(textCol))).as("simhash"))
 
   /** SimHash near-dup pairs: band the 32 bits into 4 bytes, join docs
@@ -607,10 +597,7 @@ object Dedup {
     * maxDist=1 — distance k needs the k-deletion neighborhood, which
     * grows |s|^k; chain on a blocking key first at that point. */
   def editDistancePairs(df: DataFrame, idCol: String, strCol: String): DataFrame = {
-    // Spread before the O(|s|) delete-variant explode; identical
-    // repartition subtrees below the three consumers collapse via
-    // ReuseExchange.
-    val base = Spread.forCompute(df.select(col(idCol).as("id"), col(strCol).as("s")))
+    val base = df.select(col(idCol).as("id"), col(strCol).as("s"))
     // sequence(1, 0) is DESCENDING [1,0] in Spark, so the empty string
     // must bypass the transform rather than feed it a bogus range
     val dels = expr(
@@ -676,8 +663,8 @@ object Dedup {
     require(minJw >= 0.97,
       s"jaroWinklerPairs: 1-deletion blocking is only lossless for " +
         s"minJw >= 0.97 (got $minJw) — lower thresholds need wider neighborhoods")
-    val base = Spread.forCompute(df.select(col(idCol).as("id"),
-      col(strCol).as("s"), col(blockCol).as("blk")))
+    val base = df.select(col(idCol).as("id"),
+      col(strCol).as("s"), col(blockCol).as("blk"))
     // Sorted character string: split('') may or may not emit a trailing
     // "" across engines/JDKs — harmless, "" vanishes in array_join.
     val sorted = base.withColumn("srt",
@@ -717,8 +704,8 @@ object Dedup {
   def editDistanceLink(left: DataFrame, right: DataFrame, idCol: String,
                        strCol: String, blockCol: String): DataFrame = {
     def prep(df: DataFrame) =
-      Spread.forCompute(df.select(col(idCol).as("id"), col(strCol).as("s"),
-        col(blockCol).as("blk")))
+      df.select(col(idCol).as("id"), col(strCol).as("s"),
+        col(blockCol).as("blk"))
     def variants(df: DataFrame) = {
       val dels = expr(
         """CASE WHEN length(s) = 0 THEN array(s) ELSE array_union(array(s),

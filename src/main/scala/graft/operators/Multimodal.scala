@@ -88,10 +88,6 @@ object Multimodal {
       lit("28000000"), leHex(w), leHex(h), lit("0100"), lit("1800"),
       lit("00000000"), leHex(length(body)), lit("130B0000"), lit("130B0000"),
       lit("00000000"), lit("00000000"))), body)
-    // No spread: header synthesis + the meta parse downstream are cheap
-    // column expressions — an exchange of the payload bytes costs more
-    // than it parallelizes (r13: multimodal_meta 0.33 s → 0.61 s with a
-    // spread here, reverted).
     df.select(col(idCol).as("media_id"),
       when(col(idCol) % 2 === 0, png).otherwise(bmp).as("payload"))
   }
@@ -170,11 +166,6 @@ object Multimodal {
       lit("666D7420"), lit("10000000"), lit("0100"), leHex16(nch),
       leHex(rate), leHex(rate * nch * 2L), leHex16(nch * 2L), lit("1000"),
       lit("64617461"), leHex(dataSize))), body)
-    // No spread: WAV synthesis and the PCM folds downstream are cheap
-    // per-row math — measured 2.7× SLOWER behind an exchange of the
-    // payload bytes (r13: multimodal_audio_decode 0.82 s → 2.25 s,
-    // reverted; the PNG pixel-codec paths keep theirs because real
-    // encode/decode dwarfs the exchange).
     df.select(col(idCol).as("media_id"), wav.as("payload"))
   }
 
@@ -579,10 +570,7 @@ object Multimodal {
   def synthesizeRealPng(df: DataFrame, idCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // Spread the id column before the imperative encode: the fixture
-    // scan is one task, and PNG encode + the downstream decode operators
-    // inherit this partitioning (guide §2.5; no-op at real scan widths).
-    Spread.forCompute(df.select(col(idCol).cast("long").as("media_id")))
+    df.select(col(idCol).cast("long").as("media_id"))
       .as(Encoders.scalaLong)
       .mapPartitions { it => it.map(id => (id, encodeFormulaPng(id, 0))) }
       .toDF("media_id", "payload")
@@ -596,7 +584,7 @@ object Multimodal {
     require(nFrames > 0, s"frame count must be positive, got $nFrames")
     val spark = df.sparkSession
     import spark.implicits._
-    Spread.forCompute(df.select(col(idCol).cast("long").as("media_id")))
+    df.select(col(idCol).cast("long").as("media_id"))
       .as(Encoders.scalaLong)
       .mapPartitions { it =>
         it.map { id =>

@@ -34,20 +34,13 @@ object Profiling {
     require(cols.nonEmpty, "profile needs at least one column")
     val missing = cols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"profile: no such column(s): ${missing.mkString(",")}")
-    // Spread the pruned columns first: the fixture scan is one
-    // unsplittable row group, so every aggregation below would
-    // otherwise run its data-sized stage on one task (guide §2.5;
-    // no-op at scale). Scan sharing differs by regime (ADVICE r13): when
-    // the spread inserts its exchange (narrow input), every consumer
-    // subtree reuses it via ReuseExchange — one pass total. On an
-    // already-wide input (the 100 TB case, spread = no-op) each
-    // per-column distinct below is an independent scan, but parquet
+    // Each per-column distinct below is an independent scan, but parquet
     // column pruning means each one reads ONLY its own column: total
     // I/O is bounded at ~2× the single stats pass (stats read all
     // profiled columns once; the distincts re-read each column once),
     // which is far cheaper than pinning the projection in memory or
     // paying the multi-distinct Expand's SortAggregates.
-    val base = Spread.forCompute(df.select(cols.map(col): _*))
+    val base = df.select(cols.map(col): _*)
     val statAggs = cols.flatMap { c =>
       Seq(
         count(lit(1)).as(s"__n_$c"),

@@ -280,12 +280,8 @@ object Similarity {
             col(id).cast("string")))))
     val q = dimChecked(prep(queries, idCol, vecCol, "q_id", "q_vec", "q_nrm"),
       "q_vec", "q_id")
-    // Spread the corpus before the interpreted chunk-interaction fold:
-    // higher-order expressions are the costliest per-row kernel in the
-    // ANN family and would otherwise run on the one scan task
-    // (guide §2.5; no-op at real scan widths).
-    val c = dimChecked(prep(Spread.forCompute(corpus), idCol, vecCol,
-      "c_id", "c_vec", "c_nrm"), "c_vec", "c_id")
+    val c = dimChecked(prep(corpus, idCol, vecCol, "c_id", "c_vec", "c_nrm"),
+      "c_vec", "c_id")
     val score = expr(
       s"""aggregate(
          |  transform(sequence(0, ${numChunks - 1}), i -> slice(q_vec, i * $chunkDim + 1, $chunkDim)),
@@ -398,9 +394,6 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               numPlanes: Int = 16, numBands: Int = 4, dim: Int = 64,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // No spread here: the plane dots are codegen'd graft_dot folds —
-    // measured CHEAPER single-task than behind an extra exchange
-    // (r13: ann_lsh 0.53 s → 0.99 s with a corpus spread, reverted).
     val cb = lshBuckets(corpus, numPlanes, numBands, dim, idCol, vecCol)
     val qb = lshBuckets(queries, numPlanes, numBands, dim, idCol, vecCol)
     val cand = cb.alias("c").join(qb.alias("q"),
@@ -490,8 +483,6 @@ object Similarity {
     * corpus pass; the index is just (id → cell). */
   def ivfIndex(corpus: DataFrame, numCells: Int,
                idCol: String = "vec_id", vecCol: String = "embedding"): (DataFrame, DataFrame) = {
-    // No spread: the assignment dot is codegen'd and measured faster
-    // without an extra exchange (r13: ann_ivf 0.53 s → 0.80 s, reverted).
     val c = prep(corpus, idCol, vecCol, "c_id", "c_vec", "c_nrm")
     val centroids = c.orderBy(md5(col("c_id").cast("string")), col("c_id"))
       .limit(numCells)
@@ -590,10 +581,7 @@ object Similarity {
   def pqEncode(corpus: DataFrame, codebook: DataFrame, numSub: Int, dim: Int,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val sub = dim / numSub
-    // Spread before the numSub-way explode × numCodes broadcast-join
-    // argmin — the encode pass does N·numSub·numCodes sub-vector dots
-    // and is the ANN family's heaviest scan-stage kernel (guide §2.5).
-    val c = prep(Spread.forCompute(corpus), idCol, vecCol, "c_id", "v", "__n")
+    val c = prep(corpus, idCol, vecCol, "c_id", "v", "__n")
     c.select(col("c_id"), col("v"),
         explode(sequence(lit(0), lit(numSub - 1))).as("j"))
       .select(col("c_id"), col("j"),

@@ -48,11 +48,8 @@ object Sketches {
     * bucket/rho row — the caller filters or sentinel-groups it; the
     * register builder above filters. */
   def hllBucketRho(df: DataFrame, groupCol: String, keyCol: Column): DataFrame =
-    // No spread (r14): the md5→(bucket,rho) projection feeds a partial
-    // aggregate that collapses to ≤256 rows per (group, bucket)
-    // map-side — the r13 spread exchange was a measured net loss
-    // (driver: q_hll_sketch 0.88 → 1.13 s) and its `__k` alias could
-    // shadow a groupCol named `__k` (ADVICE r13). Inline the key.
+    // The key is inlined, not aliased: a `__k` alias could shadow a
+    // groupCol named `__k`.
     df.select(col(groupCol), md5(keyCol.cast("string")).as("hx"))
       .select(col(groupCol),
         expr("cast(conv(substring(hx, 1, 2), 16, 10) as int)").as("bucket"),

@@ -57,9 +57,7 @@ object TextAnalysis {
         size(col("__w")), 4).as("stopword_ratio"),
       round(length(regexp_replace(t, "\\s+", "")).cast("double") /
         size(col("__w")), 4).as("mean_word_len"))
-    // Per-row regex/array kernels over an unsplittable scan: spread
-    // first so they run on every core (guide §2.5; no-op at scale).
-    Spread.forCompute(df).withColumn("__w", TextFunctions.words(t))
+    df.withColumn("__w", TextFunctions.words(t))
       .select(col(idCol) +: passthrough.map(col) ++: metrics: _*)
   }
 
@@ -87,7 +85,7 @@ object TextAnalysis {
     val lines = col("__l")
     def charCount(ch: String): Column =
       (length(t) - length(regexp_replace(t, ch, ""))).cast("long")
-    Spread.forCompute(df).withColumn("__w", TextFunctions.words(t))
+    df.withColumn("__w", TextFunctions.words(t))
       .withColumn("__l", split(t, "\n"))
       .select(col(idCol),
         size(w).cast("long").as("n_words"),
@@ -149,7 +147,7 @@ object TextAnalysis {
     // sequence(1, n-1) would go DESCENDING for n=1 (sequence infers a
     // negative step) — guard bigrams behind n >= 2.
     val bigrams = TextFunctions.bigramsExpr()
-    Spread.forCompute(df).withColumn("__w", TextFunctions.words(col(textCol)))
+    df.withColumn("__w", TextFunctions.words(col(textCol)))
       .select(col(idCol),
         size(col("__w")).as("n_words"),
         round(size(array_distinct(col("__w"))).cast("double") /
@@ -184,7 +182,7 @@ object TextAnalysis {
           regexp_replace(t, UrlPattern, "<URL>"),
           EmailPattern, "<EMAIL>"),
         PhonePattern, "<NUM>")
-    Spread.forCompute(df).select(col(idCol),
+    df.select(col(idCol),
       regexp_count(t, lit(UrlPattern)).as("n_urls"),
       regexp_count(t, lit(EmailPattern)).as("n_emails"),
       regexp_count(t, lit(PhonePattern)).as("n_phones"),
@@ -201,10 +199,6 @@ object TextAnalysis {
   def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String,
                     k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // No spread here (r14): the tokenize+explode kernel is cheaper than
-    // the exchange that would feed it — the driver measured text_tfidf
-    // 0.82 s (r12, no spread) → 1.55 s (r13, spread). The groupBy right
-    // below already parallelizes everything downstream of the scan.
     val words = df.select(col(idCol).as("doc"),
       explode(TextFunctions.words(col(textCol))).as("word"))
     val tf = words.groupBy(col("doc"), col("word")).agg(count(lit(1)).as("tf"))
@@ -284,10 +278,6 @@ object TextAnalysis {
     require(capacity >= supportDenom,
       s"capacity ($capacity) must be >= supportDenom ($supportDenom) for the " +
         "no-false-negative guarantee (undercount n/(capacity+1) < support n/supportDenom)")
-    // No spread (r14): the Misra-Gries partial aggregate collapses each
-    // partition to ≤capacity counters map-side, so the kernel is
-    // shuffle-light already; the driver measured the spread exchange as
-    // a net loss (text_heavy_hitters 1.4× slower r12 → r13).
     val words = df.select(explode(TextFunctions.words(col(textCol))).as("word"))
     val mg = udaf(new graft.functions.MisraGries(capacity))
     val candidates = words.agg(mg(col("word")).as("c"))
@@ -312,8 +302,7 @@ object TextAnalysis {
     require(chunkSize > overlap && overlap >= 0,
       s"need chunkSize > overlap >= 0, got chunkSize=$chunkSize overlap=$overlap")
     val step = chunkSize - overlap
-    Spread.forCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol), TextFunctions.words(col(textCol)).as("__w"))
+    df.select(col(idCol), TextFunctions.words(col(textCol)).as("__w"))
       .select(col(idCol),
         posexplode(expr(
           s"""transform(
@@ -376,10 +365,6 @@ object TextAnalysis {
                       minDocs: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    // No spread (r14): both subtrees aggregate/join immediately after
-    // the gram kernel, so the exchange moved the full text payload to
-    // win a kernel that costs less than the shuffle (driver: text_dup_spans
-    // 1.57 s r12 → 2.41 s r13; 8 cores beat 32 — over-parallelized).
     val d0 = df.select(col(idCol), col(textCol))
     val pos = d0
       .select(col(idCol).as("doc"), TextFunctions.words(col(textCol)).as("__w"))
@@ -430,8 +415,7 @@ object TextAnalysis {
   def removeDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
                             minDocs: Int = 2): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    val toks = Spread.forCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("doc"),
+    val toks = df.select(col(idCol).as("doc"),
         TextFunctions.words(col(textCol)).as("__w"))
     val pos = toks
       .select(col("doc"),
@@ -546,8 +530,7 @@ object TextAnalysis {
       .select(col("id").as("bucket"),
         (pmod(col("id") * lit(2654435761L), lit(1000001L)) - lit(500000L))
           .as("wt_micro"))
-    Spread.forCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol), explode(TextFunctions.words(col(textCol))).as("__w"))
+    df.select(col(idCol), explode(TextFunctions.words(col(textCol))).as("__w"))
       .select(col(idCol),
         pmod(conv(substring(md5(col("__w")), 1, 12), 16, 10).cast("long"),
           lit(numBuckets.toLong)).as("bucket"))
@@ -609,8 +592,7 @@ object TextAnalysis {
   def lineDedup(df: DataFrame, idCol: String, textCol: String,
                 delim: String = "\n", maxOccurrences: Int = 1): DataFrame = {
     require(maxOccurrences >= 1, s"maxOccurrences must be >= 1, got $maxOccurrences")
-    val lines = Spread.forCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol),
+    val lines = df.select(col(idCol),
         posexplode(split(col(textCol), java.util.regex.Pattern.quote(delim)))
           .as(Seq("line_no", "line")))
       .withColumn("__key", lower(trim(col("line"))))
@@ -645,6 +627,13 @@ object TextAnalysis {
     * sum would be summation-order-dependent across engines (the
     * pipeline_mixture rule).
     *
+    * The join keys are xxhash64 values of the bigram and of its head
+    * word, with no collision handling: two distinct bigrams (or head
+    * words) whose hashes collide silently merge their counts. By the
+    * birthday bound that is ~n²/2⁶⁵ expected collisions for n distinct
+    * keys — none in practice at corpus vocabularies of millions, but
+    * tens of thousands at ~10¹² distinct bigrams.
+    *
     * State is bounded by the distinct-bigram universe (the corpus's own
     * vocabulary table — the "model" IS a DataFrame, shuffled on its
     * key, never collected). */
@@ -661,8 +650,7 @@ object TextAnalysis {
     // ROWS by head hash (count of occurrences whose head is w1 — same
     // number as the old sum of c_bg per head), so no string ever
     // survives past the explode projection.
-    val bg = Spread.forCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("doc"), TextFunctions.words(col(textCol)).as("__w"))
+    val bg = df.select(col(idCol).as("doc"), TextFunctions.words(col(textCol)).as("__w"))
       .filter(size(col("__w")) >= 2)
       .select(col("doc"), explode(expr(bigramsExpr)).as("bg"))
       .select(col("doc"), xxhash64(col("bg")).as("bgh"),
@@ -812,8 +800,7 @@ object TextAnalysis {
     * tokenize-everything pass. Output (id, tokens, n_tokens). */
   def bpeEncode(df: DataFrame, idCol: String, textCol: String,
                 merges: Seq[(String, String)]): DataFrame =
-    Spread.forCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol),
+    df.select(col(idCol),
         graft.plans.BpeEncode(TextFunctions.words(col(textCol)), merges).as("tokens"))
       .withColumn("n_tokens", size(col("tokens")))
 
@@ -828,9 +815,6 @@ object TextAnalysis {
     * two documents shares at least one fingerprint, so an equi-join on
     * `fp` finds partial-overlap candidates at scan+shuffle cost. */
   def winnowedFingerprints(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    // No spread (r14): the winnow projection is codegen'd and cheap —
-    // the driver measured text_fingerprint 1.4× slower with the
-    // exchange (r12 → r13); consumers aggregate right after.
     df.select(col(idCol), TextFunctions.words(col(textCol)).as("__w"))
       .select(col(idCol), explode(graft.plans.WinnowedHashes(col("__w"))).as("fp"))
 
@@ -882,8 +866,7 @@ object TextAnalysis {
   def rakeKeyphrases(df: DataFrame, idCol: String, textCol: String,
                      topK: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pw = Spread.forCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("__doc"),
+    val pw = df.select(col(idCol).as("__doc"),
         posexplode(TextFunctions.words(col(textCol))).as(Seq("pos", "w")))
       .filter(!col("w").isin(Stopwords: _*) && col("w") =!= "")
     val isl = pw.withColumn("rn", row_number().over(
@@ -917,8 +900,7 @@ object TextAnalysis {
     * never leave the row, so the operator runs at scan speed with zero
     * shuffle at any scale. */
   def readability(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    Spread.forCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol), TextFunctions.words(col(textCol)).as("l"),
+    df.select(col(idCol), TextFunctions.words(col(textCol)).as("l"),
         expr(s"size(filter(split($textCol, '[.!?]+'), x -> trim(x) != ''))").as("ns0"))
       .select(col(idCol),
         size(col("l")).cast("long").as("n_words"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AsOfJoin, Hierarchy, Profiling, Sampling, Sketches, Skew, Sorting, Spread, Sweep, Upsert}
+import graft.operators.{AsOfJoin, Hierarchy, Profiling, Sampling, Sketches, Skew, Sorting, Sweep, Upsert}
 import graft.sources.Tables
 
 /** The general relational query surface the reference lacks entirely
@@ -498,9 +498,8 @@ object RelationalQueries {
 
     // JSON extraction from the events.props column.
     "q_json_extract" -> ((s, dir) =>
-      // Spread before the per-row JSON path extraction (guide §2.5).
-      Spread.forCompute(Tables.events(s, dir)
-          .select(col("event_id"), col("props")))
+      Tables.events(s, dir)
+        .select(col("event_id"), col("props"))
         .select(
           col("event_id"),
           get_json_object(col("props"), "$.k").cast("int").as("k"))
@@ -518,10 +517,9 @@ object RelationalQueries {
     // per-row string re-parse in every downstream query, no brittle
     // full-schema inference over the corpus).
     "q_variant" -> ((s, dir) => {
-      // Spread ahead of the per-row parse_json×4 kernel (guide §2.5).
-      val ev = Spread.forCompute(Tables.events(s, dir).select(
+      val ev = Tables.events(s, dir).select(
         col("event_id"), col("props"), col("user_id"), col("event_type"),
-        col("value")))
+        col("value"))
       val js = ev.select(col("event_id"), col("props"),
         to_json(struct(col("user_id").as("u"), col("event_type").as("t"),
           struct(floor(col("value") * 100).cast("long").as("cents"))
@@ -584,16 +582,9 @@ object RelationalQueries {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_ms"), col("event_id"))
         .rowsBetween(-3, Window.currentRow)
-      // Scale-gated keyed spread (guide §2.4/§2.5): the window's
-      // ClusteredDistribution(user_id) is satisfied by this exchange
-      // (REPARTITION_BY_NUM — AQE never coalesces it), so the frame
-      // work runs cluster-wide instead of on the ~3 tasks byte-based
-      // coalescing leaves for a KB-sized shuffle; a no-op on wide scans.
-      graft.operators.Spread.byKey(
-          Tables.events(s, dir)
-            .select(col("user_id"), col("event_id"), col("ts_ms"),
-              floor(col("value") * 100).cast("long").as("cents")),
-          col("user_id"))
+      Tables.events(s, dir)
+        .select(col("user_id"), col("event_id"), col("ts_ms"),
+          floor(col("value") * 100).cast("long").as("cents"))
         .select(col("user_id"), col("event_id"), col("ts_ms"),
           sum(col("cents")).over(w).as("rolling_cents"),
           count(lit(1)).over(w).as("rolling_n"))
@@ -613,14 +604,9 @@ object RelationalQueries {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_ms"), col("event_id"))
         .rowsBetween(-15, Window.currentRow)
-      // Keyed spread ahead of the frame collect_list + interpreted
-      // higher-order fold — the priciest per-row window kernel in the
-      // family (see q_rolling_window for the mechanism/scale gate).
-      graft.operators.Spread.byKey(
-          Tables.events(s, dir)
-            .select(col("user_id"), col("event_id"), col("ts_ms"),
-              col("value").cast("double").as("v")),
-          col("user_id"))
+      Tables.events(s, dir)
+        .select(col("user_id"), col("event_id"), col("ts_ms"),
+          col("value").cast("double").as("v"))
         .withColumn("vals", collect_list(col("v")).over(w))
         .select(col("user_id"), col("event_id"), col("ts_ms"),
           expr("""round(
@@ -642,12 +628,9 @@ object RelationalQueries {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_ms"))
         .rangeBetween(-3600000L, Window.currentRow)
-      // Keyed spread for the RANGE-frame pass (see q_rolling_window).
-      graft.operators.Spread.byKey(
-          Tables.events(s, dir)
-            .select(col("user_id"), col("event_id"), col("ts_ms"),
-              floor(col("value") * 100).cast("long").as("cents")),
-          col("user_id"))
+      Tables.events(s, dir)
+        .select(col("user_id"), col("event_id"), col("ts_ms"),
+          floor(col("value") * 100).cast("long").as("cents"))
         .select(col("user_id"), col("event_id"), col("ts_ms"),
           sum(col("cents")).over(w).as("hour_cents"),
           count(lit(1)).over(w).as("hour_n"))
@@ -781,9 +764,7 @@ object RelationalQueries {
     // the DuckDB oracle.
     "q_udtf_ngrams" -> ((s, dir) => {
       graft.plans.GraftExtensions.register(s)
-      // Spread (guide §2.5): the UDTF gram generator is per-row eval
-      // over the one-split fixture scan.
-      Spread.forCompute(Tables.documents(s, dir).select(col("source"), col("text")))
+      Tables.documents(s, dir).select(col("source"), col("text"))
         .createOrReplaceTempView("docs_udtf")
       s.sql("""SELECT source, count(*) AS n_grams,
               |       count(DISTINCT gram_hash) AS n_distinct,
@@ -1191,10 +1172,7 @@ object RelationalQueries {
             .otherwise(col("o_orderpriority")))
       val cols = Seq("o_custkey", "o_orderdate", "o_orderkey",
         "o_orderpriority", "o_orderstatus", "o_totalprice")
-      // Spread the pruned columns before the 6-way explode + md5 bucket
-      // projection: the single-row-group scan would otherwise run the
-      // whole stack single-threaded (guide §2.5; no-op at scale).
-      val stacked = Spread.forCompute(o.select(cols.map(col): _*))
+      val stacked = o.select(cols.map(col): _*)
         .select(explode(array(cols.map(c =>
           struct(lit(c).as("column"), col(c).cast("string").as("v"))): _*))
           .as("p"))
@@ -1574,10 +1552,6 @@ object RelationalQueries {
     // at sf≤0.1). At pipeline scale use q_percentiles_sketch below —
     // same shape, partial-aggregable constant-memory sketch.
     "q_percentiles" -> ((s, dir) =>
-      // No spread: the exact percentile buffer is value-count state the
-      // size of the column — parallel partial buffers just move the cost
-      // into the 3-task merge + a fat buffer shuffle (measured 1.74 s →
-      // 2.01 s with a spread, reverted).
       Tables.lineitem(s, dir)
         .groupBy(col("l_returnflag"))
         .agg(
@@ -1606,18 +1580,14 @@ object RelationalQueries {
     // KNOWN FAILURE MODE (deliberate): the oracle hardcodes
     // `TRUE AS sketch_within_5pct`; if the sketch ever drifts past 5%
     // relative error the query fails as a hash mismatch on that boolean
-    // — check `sketch_within_5pct` first when debugging here. Note the
-    // spread below makes the merged GK summary depend on the partition
-    // count (defaultParallelism), so the sketch value — and in
-    // principle that boolean — is also a function of the HOST's core
-    // count (ADVICE r13); the ~100-order-statistic headroom against a
-    // 5% band keeps it safely TRUE at any partitioning.
+    // — check `sketch_within_5pct` first when debugging here. The
+    // merged GK summary depends on the scan's partition count, so the
+    // sketch value — and in principle that boolean — depends on how the
+    // input splits; the ~100-order-statistic headroom against a 5% band
+    // keeps it safely TRUE at any partitioning.
     "q_percentiles_sketch" -> ((s, dir) =>
-      // Spread: parallel partial sketch/percentile buffers (guide §2.5).
-      // The GK summary is merge-sound under any partitioning and the
-      // graded surface only reads it through the 5% accuracy band.
-      Spread.forCompute(Tables.lineitem(s, dir).select(
-          col("l_returnflag"), col("l_extendedprice")))
+      Tables.lineitem(s, dir)
+        .select(col("l_returnflag"), col("l_extendedprice"))
         .groupBy(col("l_returnflag"))
         .agg(
           expr("approx_percentile(l_extendedprice, array(0.5D, 0.9D), 2000)").as("__a"),
@@ -2330,12 +2300,7 @@ object RelationalQueries {
     "q_bootstrap_ci" -> ((s, dir) => {
       val e = Tables.events(s, dir)
         .select(col("event_id"), floor(col("value") * 100).cast("long").as("cents"))
-      // 12 md5 digests + 48 hex-substring uniforms per row: spread the
-      // two-column input so the replicate-weight projection runs on
-      // every core instead of the one scan task (guide §2.5). All
-      // downstream aggregates are exact integer sums (w, w·cents) and a
-      // percentile buffer — partition-order-invariant.
-      val reps = Spread.forCompute(e).select(col("event_id"), col("cents"),
+      val reps = e.select(col("event_id"), col("cents"),
           explode(expr("sequence(0, 11)")).as("g"))
         .withColumn("hx", md5(concat(col("event_id").cast("string"), lit("|"),
           col("g").cast("string"))))

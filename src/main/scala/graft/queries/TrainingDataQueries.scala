@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, Graph, Layout, Multimodal, Sampling, Similarity, Sketches, Spread, Sweep, TextAnalysis, Upsert}
+import graft.operators.{Dedup, Graph, Layout, Multimodal, Sampling, Similarity, Sketches, Sweep, TextAnalysis, Upsert}
 import graft.plans.ShingleHashes
 import graft.sources.Tables
 
@@ -723,12 +723,7 @@ object TrainingDataQueries {
     // count — the harness that tells you whether 16x4 banding at
     // est>=0.5 is the right operating point BEFORE committing a 100 TB
     // dedup run to it.
-    // Spread.suppress (r14, composite-aware spread): the two candidate
-    // generators' internal exchanges are paid but the full-outer join
-    // above dominates — the driver measured the composite 2.05 s (r12,
-    // no spreads) → 3.90 s (r13, spreads), while the standalone
-    // dedup_minhash / dedup_ngram_jaccard keep theirs.
-    "dedup_pair_eval" -> ((s, dir) => graft.operators.Spread.suppress {
+    "dedup_pair_eval" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val cand = Dedup.minhashPairs(docs, "doc_id", "text")
         .select(col("doc_a"), col("doc_b"), lit(1).as("m"))
@@ -751,10 +746,7 @@ object TrainingDataQueries {
     // groupBys over the component labels + one anti-join for the
     // never-paired documents; output is bounded by the largest
     // component size, never the corpus.
-    "dedup_cluster_stats" -> ((s, dir) => graft.operators.Spread.suppress {
-      // suppress (r14): the component rounds above the pair generator
-      // dominate; the internal spread only adds its exchange (verdict
-      // item 3 names this composite alongside dedup_pair_eval).
+    "dedup_cluster_stats" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val comp = Dedup.connectedComponents(
         Dedup.minhashPairs(docs, "doc_id", "text"))
@@ -2186,8 +2178,7 @@ object TrainingDataQueries {
     // the expensive half; the sketch half's state is 256 longs per
     // corpus regardless of scale.
     "text_corpus_overlap" -> ((s, dir) => {
-      val docs = Spread.forCompute(
-          Tables.documents(s, dir).select(col("source"), col("text")))
+      val docs = Tables.documents(s, dir).select(col("source"), col("text"))
         .select(when(pmod(expr("cast(substring(source, 4, 10) as int)"),
             lit(2)) === 0, lit("even_sources"))
             .otherwise(lit("odd_sources")).as("seg"),
@@ -2903,8 +2894,7 @@ object TrainingDataQueries {
       val schema = new StructType()
         .add("id", LongType).add("status", StringType)
         .add("priority", StringType).add("total_cents", LongType)
-      // Spread before the per-row from_xml parser (guide §2.5).
-      Spread.forCompute(xml).select(from_xml(col("x"), schema).as("r"))
+      xml.select(from_xml(col("x"), schema).as("r"))
         .select(col("r.id").as("o_orderkey"), col("r.status").as("status"),
           col("r.priority").as("priority"), col("r.total_cents").as("total_cents"))
         .orderBy("o_orderkey")
@@ -3134,10 +3124,7 @@ object TrainingDataQueries {
     // keep-one) → leak-proof split → per-split stats. Same single-scan
     // discipline as v1 up to the near-dup stage, whose banded self-join
     // + O(log D) component rounds are the only additions.
-    // suppress (r14): the chain's joins/aggregates dominate; the
-    // operator-internal spreads cost the composite +0.80 s r12 → r13
-    // (driver) without a single-kernel payoff.
-    "pipeline_curation_v2" -> ((s, dir) => graft.operators.Spread.suppress {
+    "pipeline_curation_v2" -> ((s, dir) => {
       val kept = TextAnalysis.quality(
           Tables.documents(s, dir), "doc_id", "text", passthrough = Seq("text"))
         .filter(col("alpha_ratio") >= 0.6 && col("stopword_ratio") >= 0.05)
@@ -3190,9 +3177,7 @@ object TrainingDataQueries {
     // minhash near-dup survivors → context-length chunking → token-
     // budget packing — documents in, packed training bins out, every
     // stage from this library, graded end-to-end on the per-bin rollup.
-    // suppress (r14): same composite story — driver measured +1.15 s
-    // r12 → r13 from the internal spread exchanges under the chain.
-    "pipeline_training_batches" -> ((s, dir) => graft.operators.Spread.suppress {
+    "pipeline_training_batches" -> ((s, dir) => {
       val kept = TextAnalysis.quality(
           Tables.documents(s, dir), "doc_id", "text", passthrough = Seq("text"))
         .filter(col("alpha_ratio") >= 0.6 && col("stopword_ratio") >= 0.05)

@@ -242,58 +242,94 @@ class TimeTravelSpec extends SparkSpec {
       s"unexpected survivors: $left")
   }
 
-  test("KeyBloom: SQL-side build/probe and driver-side probe agree bit-for-bit") {
-    import graft.plans.KeyBloom
-    // driver-side hashLongs must replicate SQL xxhash64(k) / xxhash64(k, 1)
-    val ks = Seq(-1L, 0L, 1L, 42L, 123456789L, Long.MaxValue)
-    val sql = ks.toDF("k")
-      .select(xxhash64($"k"), xxhash64($"k", lit(1L)))
-      .as[(Long, Long)].collect().toSeq
-    assert(sql === ks.map(KeyBloom.hashLongs))
-    // build over 1..500; every inserted key probes TRUE on the driver,
-    // and the SQL-side probe aggregate agrees with membership
-    val bloom = (1L to 500L).toDF("k")
-      .agg(KeyBloom.agg($"k")).as[Array[Byte]].head()
-    assert(KeyBloom.mightContainAny(bloom, Seq(7L)))
-    assert(KeyBloom.mightContainAny(bloom, Seq(900L, 250L)))
-    // 200 disjoint keys: at ~4% worst-case FP for this fill, ANY-hit
-    // over a disjoint probe set can fire; assert per-key FP is rare
-    val fp = (10001L to 10200L).count(k => KeyBloom.mightContainAny(bloom, Seq(k)))
-    assert(fp < 20, s"implausible Bloom false-positive count: $fp/200")
-    val sqlHits = (1L to 500L).toDF("k")
-      .agg(max(when(KeyBloom.mightContain($"k", bloom), 1L).otherwise(0L)))
-      .as[Long].head()
-    assert(sqlHits === 1L)
-    val sqlMiss = Seq(10007L).toDF("k")
-      .agg(max(when(KeyBloom.mightContain($"k", bloom), 1L).otherwise(0L)))
-      .as[Long].head()
-    assert(KeyBloom.mightContainAny(bloom, Seq(10007L)) === (sqlMiss === 1L))
-  }
-
-  test("TimeTravel: a STRING-keyed disjoint delta takes the Bloom skip path") {
+  test("TimeTravel: STRING-keyed upserts tag changes and merge without key stats") {
     val root = java.nio.file.Files.createTempDirectory("graft-ttb-spec").toString
     val base = (1 to 200).map(i => (f"doc-$i%04d", i.toLong)).toDF("k", "v")
     TimeTravel.init(base, root, "k")
-    // overlapping-key upsert: the probe must SCAN the base (no skip —
-    // string keys have no range stats, so this is pure Bloom behaviour)
+    // string keys record no range stats, so every upsert probes the
+    // whole chain for its change types
     TimeTravel.upsert(root,
       Seq(("doc-0001", 101L), ("doc-0002", 102L)).toDF("k", "v"))
-    assert(TimeTravel.lastProbeScannedEntries === 1,
-      "an overlapping string delta must probe the base")
-    // DISJOINT-key upsert: every chain Bloom must miss -> 0 entries
-    // scanned, all rows typed insert without the membership join
     TimeTravel.upsert(root,
       Seq(("zzz-9991", 1L), ("zzz-9992", 2L)).toDF("k", "v"))
-    assert(TimeTravel.lastProbeScannedEntries === 0,
-      "a disjoint string delta must skip the whole chain")
     val ch = TimeTravel.changes(spark, root, 1L, 2L, "k")
       .select("k", "_change_type").as[(String, String)].collect().toSet
     assert(ch === Set(("zzz-9991", "insert"), ("zzz-9992", "insert")))
-    // the skip changed no semantics: snapshot equals the full merge
+    val ch1 = TimeTravel.changes(spark, root, 0L, 1L, "k")
+      .select("k", "_change_type").as[(String, String)].collect().toSet
+    assert(ch1 === Set(("doc-0001", "update"), ("doc-0002", "update")))
     val snap = TimeTravel.snapshot(spark, root, 2L, "k")
       .as[(String, Long)].collect().toSet
     assert(snap.size === 202 && snap.contains(("doc-0001", 101L)) &&
       snap.contains(("zzz-9991", 1L)))
+  }
+
+  test("TimeTravel: an integral-keyed disjoint delta skips the whole chain by range") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ttg-spec").toString
+    TimeTravel.init((1L to 200L).map(k => (k, k)).toDF("k", "v"), root, "k")
+    TimeTravel.upsert(root, Seq((5L, 50L)).toDF("k", "v"))
+    assert(TimeTravel.lastProbeScannedEntries === 1,
+      "an overlapping delta must probe the base")
+    // [1000, 1001] misses both [1, 200] and [5, 5]: no membership join
+    TimeTravel.upsert(root, Seq((1000L, 1L), (1001L, 2L)).toDF("k", "v"))
+    assert(TimeTravel.lastProbeScannedEntries === 0,
+      "a disjoint delta must skip the whole chain")
+    val ch = TimeTravel.changes(spark, root, 0L, 2L, "k")
+      .select("k", "_change_type").as[(Long, String)].collect().toSet
+    assert(ch === Set((5L, "update"), (1000L, "insert"), (1001L, "insert")))
+  }
+
+  test("TimeTravel: legacy B: manifest fields still read; junk entries stay torn") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ttl-spec").toString
+    TimeTravel.init((1L to 10L).map(k => (k, "a", k)).toDF("k", "seg", "v"), root, "k")
+    TimeTravel.upsert(root, Seq((1L, "b", 11L)).toDF("k", "seg", "v")) // v1
+    def entriesOf(v: Long): Seq[String] = {
+      val text = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(root, f"manifest-$v%05d.txt")), "UTF-8")
+      text.split("\n").toSeq.tail
+    }
+    val path = java.nio.file.Paths.get(root, "manifest-00001.txt")
+    val entries = entriesOf(1L)
+    // every entry the writer emits has exactly four fields
+    assert(entries.nonEmpty && entries.forall(_.split(" ").length == 4), entries)
+    // rewrite the manifest with a 5th field on its first entry and a
+    // header whose CRC matches, as an older writer would have
+    def rewrite(field: String): Unit = {
+      val es = (entries.head + " " + field) +: entries.tail
+      val crc = new java.util.zip.CRC32()
+      crc.update(es.mkString("\n").getBytes("UTF-8"))
+      val header = s"graft-manifest 2 k ${es.size} ${java.lang.Long.toHexString(crc.getValue)}"
+      java.nio.file.Files.write(path,
+        ((header +: es).mkString("\n") + "\n").getBytes("UTF-8"))
+    }
+    val before = rows(TimeTravel.snapshot(spark, root, 1L, "k"))
+    rewrite("B:AAAA")
+    assert(TimeTravel.latestVersion(root) === 1L)
+    assert(rows(TimeTravel.snapshot(spark, root, 1L, "k")) === before)
+    // a commit on top of it writes the inherited entries back in the
+    // four-field form
+    TimeTravel.upsert(root, Seq((2L, "c", 22L)).toDF("k", "seg", "v")) // v2
+    assert(entriesOf(2L).forall(_.split(" ").length == 4), entriesOf(2L))
+    assert(rows(TimeTravel.snapshot(spark, root, 2L, "k")) ===
+      before - ((2L, "a", 2L)) + ((2L, "c", 22L)))
+    // an unknown 5th field still reads as torn
+    rewrite("X:AAAA")
+    intercept[java.io.IOException] { TimeTravel.snapshot(spark, root, 1L, "k") }
+  }
+
+  test("TimeTravel.init: a failed write cancels the overlapped probe and cleans up") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ttf-spec").toString
+    // the probe aggregates `id` only; the write fails in its first task
+    // while the probe over 4M rows is still running
+    val df = spark.range(4000000L)
+      .withColumn("s", when($"id" === 10L, raise_error(lit("write failed")))
+        .otherwise(lit("x")))
+    intercept[Exception] { TimeTravel.init(df, root, "id") }
+    val left = new java.io.File(root).list().toSeq
+    assert(!left.exists(_.startsWith("base-")), s"staged base survived: $left")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "the probe job outlived the failed commit")
+    assert(TimeTravel.latestVersion(root) === -1L)
   }
 
   test("TimeTravel.upsertOnce: a replayed txn commits nothing; markers survive compaction") {
